@@ -71,7 +71,8 @@ final class GraftLake(spark: SparkSession, rawRoot: String, lakeRoot: String,
         val mor = store.get(t.dir).exists(_.config.mergeOnRead)
         // MOR tables get the threshold-driven maintenance check instead
         // (they cannot carry a stats index — buildStatsIndex refuses);
-        // the check is O(sidecar) when healthy, so per-sync is safe.
+        // when healthy the check is a listing of the committed batch dirs
+        // plus driver-side footer reads, no Spark jobs, so per-sync is safe.
         if (mor) maintainIfNeeded(t.schema, t.table): Unit
         else refreshStatsIndex(t.schema, t.table): Unit
       }
@@ -463,7 +464,7 @@ final class GraftLake(spark: SparkSession, rawRoot: String, lakeRoot: String,
     val stats = io.StatsIndex.build(spark,
       s"${lakeRoot.stripSuffix("/")}/$schema/$table", cols, bloomCols, bloomBits)
     stats.write.mode("overwrite").parquet(statsPath(schema, table))
-    spark.read.parquet(statsPath(schema, table)).count()
+    io.ParquetFooters.partRowCounts(spark, Seq(statsPath(schema, table))).sum
   }
 
   /** Incremental maintenance of a persisted stats index after a rewrite
@@ -498,7 +499,7 @@ final class GraftLake(spark: SparkSession, rawRoot: String, lakeRoot: String,
       if (!fs.rename(tmp, sp))
         throw new java.io.IOException(s"stats-index swap $tmp -> $sp failed")
       spark.catalog.refreshByPath(statsPath(schema, table))
-      spark.read.parquet(statsPath(schema, table)).count()
+      io.ParquetFooters.partRowCounts(spark, Seq(statsPath(schema, table))).sum
     }
   }
 
@@ -574,8 +575,9 @@ object GraftLake {
 
   /** Default micro-batch cadence of the streaming maintenance check
     * ([[streaming.CdcStream]] `maintainEvery`): every 10 deliveries —
-    * the healthy-path check is O(sidecar), so cadence bounds sidecar
-    * accumulation (≤ 10 batches' masks past threshold), not cost. */
+    * the healthy-path check is a listing plus driver-side footer reads
+    * with no Spark jobs, so cadence bounds sidecar accumulation
+    * (≤ 10 batches' masks past threshold), not cost. */
   val DefaultMaintainEvery = 10
 
   def apply(spark: SparkSession, rawRoot: String, lakeRoot: String,

@@ -136,9 +136,9 @@ object CdcPipeline {
   /** Merge-on-read twin of [[loadIncremental]]: the same tagged change
     * batch commits through [[MorTable.mergeTagged]] — append-only
     * winners + equality-delete sidecar instead of the copy-on-write
-    * rewrite. `rowsWritten` counts the appended winners (footer-count
-    * read of the new batch dir — metadata-only); `impactedFiles` is
-    * empty by construction: no stored file is ever rewritten. */
+    * rewrite. `rowsWritten` counts the appended winners (driver-side
+    * footer reads of the new batch dir, no Spark job); `impactedFiles`
+    * is empty by construction: no stored file is ever rewritten. */
   def loadIncrementalMor(spark: SparkSession, cdcFiles: Seq[String], outPath: String,
                          cfg: TableConfig, format: String = "parquet"): MergeStats = {
     require(cdcFiles.nonEmpty, "no change files")
@@ -155,16 +155,11 @@ object CdcPipeline {
     MergeStats(morBatchRows(spark, outPath, b), Nil, insertOnly = false)
   }
 
-  /** Appended-row count of one MOR commit — footer-count read
-    * (metadata only); an ALL-DELETE batch leaves a partless dir
-    * (nothing appended) that schema inference would reject — report 0. */
-  private def morBatchRows(spark: SparkSession, outPath: String, b: Long): Long = {
-    val batchDir = new Path(s"$outPath/data/batch=$b")
-    val bfs = batchDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!bfs.exists(batchDir) ||
-        !bfs.listStatus(batchDir).exists(_.getPath.getName.endsWith(".parquet"))) 0L
-    else spark.read.parquet(batchDir.toString).count()
-  }
+  /** Appended-row count of one MOR commit — driver-side footer reads of
+    * the batch dir, no Spark job; an ALL-DELETE batch appends nothing
+    * (a zero-row or partless dir) and counts 0. */
+  private def morBatchRows(spark: SparkSession, outPath: String, b: Long): Long =
+    ParquetFooters.partRowCounts(spark, Seq(s"$outPath/data/batch=$b")).sum
 
   /** The flagship: incremental latest-wins merge with copy-on-write rewrite
     * (DMSCDC_LoadIncremental.py:41-87). */

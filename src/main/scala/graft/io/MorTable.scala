@@ -927,7 +927,7 @@ object MorTable {
     dropInPaths(allDead, DelFile, fullyDead)
       .write.mode("overwrite").parquet(s"${delDir(path)}/batch=$b")
     commit(spark, path, b)
-    val nAfter = spark.read.parquet(s"${delDir(path)}/batch=$b").count()
+    val nAfter = ParquetFooters.partRowCounts(spark, Seq(s"${delDir(path)}/batch=$b")).sum
 
     // 2) physical deletes: fully-dead files, superseded position dirs,
     // lowered equality dirs.
@@ -945,10 +945,10 @@ object MorTable {
   }
 
   /** Physical health readout of a MOR table — the `cdc_mor_sidecar_stats`
-    * ledger as one record, costed for a scheduler: commit-listing +
-    * sidecar-sized reads plus a projection-empty footer count of the data
-    * dirs. Never joins masks against data (that is what maintenance
-    * itself pays for). */
+    * ledger as one record, costed for a scheduler: a listing of the
+    * committed batch dirs plus one driver-side footer read per part file
+    * ([[ParquetFooters]]), no Spark jobs. Never joins masks against data
+    * (that is what maintenance itself pays for). */
   final case class Health(dataRows: Long, dataFiles: Long,
                           posRows: Long, posFiles: Long,
                           eqKeys: Long, eqFiles: Long) {
@@ -962,16 +962,11 @@ object MorTable {
   }
 
   def health(spark: SparkSession, path: String): Health = {
-    val f = fs(spark, path)
     val batches = committedBatches(spark, path)
-    def live(base: String): Seq[String] =
-      dirsWithParquet(spark, path, committedDirs(spark, path, base, batches))
-    def nFiles(dirs: Seq[String]): Long = dirs.map(d =>
-      f.listStatus(new Path(d)).count(_.getPath.getName.endsWith(".parquet")).toLong).sum
-    def nRows(dirs: Seq[String]): Long =
-      if (dirs.isEmpty) 0L else spark.read.parquet(dirs: _*).count()
-    val (dd, pd, ed) = (live(dataDir(path)), live(delDir(path)), live(delEqDir(path)))
-    Health(nRows(dd), nFiles(dd), nRows(pd), nFiles(pd), nRows(ed), nFiles(ed))
+    def parts(base: String): Seq[Long] =
+      ParquetFooters.partRowCounts(spark, committedDirs(spark, path, base, batches))
+    val (dd, pd, ed) = (parts(dataDir(path)), parts(delDir(path)), parts(delEqDir(path)))
+    Health(dd.sum, dd.size.toLong, pd.sum, pd.size.toLong, ed.sum, ed.size.toLong)
   }
 
   /** Threshold-driven maintenance — the closed loop between the
@@ -980,8 +975,9 @@ object MorTable {
     * reads no table data for its lowering step: one target read pays
     * for both). Fires iff `amplification > maxAmplification`; returns
     * the PRE-maintenance health when it fired so callers can log why,
-    * None when the table is within budget (the common, O(metadata)
-    * case — an every-batch check is safe to schedule). */
+    * None when the table is within budget (the common case: a listing
+    * plus driver-side footer reads, no Spark jobs — an every-batch check
+    * is safe to schedule). */
   def maintainIfNeeded(spark: SparkSession, path: String,
                        maxAmplification: Double,
                        clusterBy: Seq[String] = Nil): Option[Health] = {

@@ -1,5 +1,7 @@
 package graft.io
 
+import scala.jdk.CollectionConverters._
+
 /** Overlap independent Spark actions (guide-§2.6 shape, and the same
   * fan-out idea [[graft.Controller]] uses for tables): the driver's
   * sequential action calls are what serialize independent sub-second
@@ -35,13 +37,16 @@ object Overlap {
 
   /** Run the thunks and wait for ALL of them; the first failure
     * rethrows — as the ORIGINAL exception, no executor wrapper — after
-    * every thunk has finished (no write is abandoned mid-flight). Each
+    * every thunk has finished (no write is abandoned mid-flight), with
+    * every later failure attached to it as suppressed. Each
     * thunk except the last tries to take a global permit and runs on
     * its own thread when one is free; thunks that find the budget
     * exhausted (and always the last one) run inline on the caller's
     * thread. If the caller is interrupted while waiting, the spawned
     * thunks still run to completion and the interrupt flag is restored
-    * after they finish. */
+    * after they finish; it is also set when a later failure is an
+    * [[InterruptedException]], which would otherwise be swallowed as
+    * suppressed (a rethrown one needs no flag: it is the interrupt). */
   def awaitAll(work: Seq[() => Unit]): Unit = {
     if (work.isEmpty) return
     if (work.size == 1) { work.head.apply(); return }
@@ -67,7 +72,13 @@ object Overlap {
         try { th.join(); joined = true }
         catch { case _: InterruptedException => interrupted = true }
     }
-    if (interrupted) Thread.currentThread().interrupt()
-    if (!errs.isEmpty) throw errs.peek()
+    val failures = errs.asScala.toList
+    val later = failures.drop(1).filterNot(t => failures.headOption.exists(_ eq t))
+    if (interrupted || later.exists(_.isInstanceOf[InterruptedException]))
+      Thread.currentThread().interrupt()
+    failures.headOption.foreach { first =>
+      later.foreach(first.addSuppressed)
+      throw first
+    }
   }
 }

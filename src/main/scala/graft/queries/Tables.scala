@@ -99,14 +99,19 @@ object Tables {
     * is unaffected. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     val key = s"${sfDir.stripSuffix("/")}/events.parquet#normalized"
-    perSession(spark).computeIfAbsent(key, { _ =>
+    val cache = perSession(spark)
+    // Not computeIfAbsent: the raw read below caches through the SAME
+    // map, and a mapping function must not update other mappings (JDK 9+
+    // throws "Recursive update" when both keys share a bin).
+    Option(cache.get(key)).getOrElse {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val df = apply(spark, sfDir, "events")
-      df.schema("ts").dataType match {
+      val normalized = df.schema("ts").dataType match {
         case LongType => df
         case _ => df.withColumn("ts",
           graft.streaming.EventStreams.tsMicros(df) * lit(1000L))
       }
-    })
+      Option(cache.putIfAbsent(key, normalized)).getOrElse(normalized)
+    }
   }
 }

@@ -36,8 +36,9 @@ object CdcStream {
     *   batch rows + impacted-file rows, not table size.
     * @param maintainEvery for merge-on-read tables: every N micro-batches,
     *   run the threshold-driven [[graft.io.MorTable.maintainIfNeeded]]
-    *   check after the merge (0 = never). The check is O(sidecar) when
-    *   healthy; a continuous high-churn stream otherwise accumulates
+    *   check after the merge (0 = never). When healthy the check is a
+    *   listing plus driver-side footer reads, no Spark jobs; a
+    *   continuous high-churn stream otherwise accumulates
     *   mask sidecars until an operator notices.
     */
   def start(spark: SparkSession, tableDir: String, outPath: String, cfg: TableConfig,

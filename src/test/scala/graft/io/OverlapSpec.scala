@@ -17,6 +17,41 @@ class OverlapSpec extends AnyFunSuite {
     assert(ran.get() == 3) // no thunk abandoned mid-flight
   }
 
+  test("awaitAll keeps every later failure as suppressed on the first") {
+    val fails = (1 to 3).map(i => new IllegalStateException(s"f$i"))
+    val e = intercept[IllegalStateException] {
+      Overlap.awaitAll(fails.map(f => () => throw f))
+    }
+    assert(fails.contains(e))
+    assert((e +: e.getSuppressed.toSeq).toSet == fails.toSet,
+      "no failure may be dropped")
+  }
+
+  test("awaitAll sets the interrupt flag only for an interrupt it does not rethrow") {
+    // the interrupted thunk fails after the first failure, so it is only
+    // kept as suppressed and the flag must carry the interrupt
+    val e = intercept[IllegalStateException] {
+      Overlap.awaitAll(Seq(
+        () => throw new IllegalStateException("first"),
+        () => { Thread.sleep(50); throw new InterruptedException("cancelled") }))
+    }
+    // interrupted() reads AND clears, so the flag cannot leak into the
+    // next test on this thread
+    assert(Thread.interrupted(), "the caller must see the interrupt")
+    assert(e.getMessage == "first")
+    assert(e.getSuppressed.toSeq.map(_.getMessage) == Seq("cancelled"))
+
+    // a rethrown InterruptedException is the interrupt: the flag stays
+    // clear, so the caller's cleanup does not run interrupted
+    val ie = intercept[InterruptedException] {
+      Overlap.awaitAll(Seq(
+        () => { Thread.sleep(20) },
+        () => throw new InterruptedException("cancelled")))
+    }
+    assert(ie.getMessage == "cancelled")
+    assert(!Thread.interrupted(), "a rethrown interrupt must not also set the flag")
+  }
+
   test("global budget bounds in-flight thunks across nested sites") {
     val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
     val maxSeen = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -1,7 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.{JobCounter, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,19 +25,10 @@ class CatalogRouteSpec extends SparkSpec {
   private lazy val queries = emb.where($"vec_id" === 0L)
     .select($"vec_id".as("qid"), $"embedding").localCheckpoint(true)
 
-  private def listingJobs(body: => Unit): Long = {
-    val n = new java.util.concurrent.atomic.AtomicLong(0L)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val d = Option(j.properties.getProperty("spark.job.description")).getOrElse("")
-        if (d.startsWith("Listing leaf files")) n.incrementAndGet(): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(1000) } // listener delivery is async
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
+  private def listingJobs(body: => Unit): Long =
+    JobCounter(spark, j =>
+      Option(j.properties.getProperty("spark.job.description")).getOrElse("")
+        .startsWith("Listing leaf files"))(body)._2
 
   private def knn(maskDir: String): Set[(Long, Long, Long)] =
     Similarity.binaryIvfKnn(spark, maskDir, emb, queries, cents,
