@@ -285,13 +285,9 @@ final class GraftLake(spark: SparkSession, rawRoot: String, lakeRoot: String,
     val raw = tableDir(schema, table)
     val cfg = store.get(raw).map(_.config).getOrElse(TableConfig())
     require(cfg.hasPrimaryKey, s"$schema/$table has no primary keys configured")
-    val tracked =
-      if (trackCols.nonEmpty) trackCols
-      else streaming.CdcStream.sourceSchema(spark, raw).fieldNames.toSeq
-        .filterNot(c => cfg.primaryKeys.contains(c) || c == cdc.Op.column)
     streaming.CdcStream.startWithChangeFeed(spark, raw,
       s"${lakeRoot.stripSuffix("/")}/$schema/$table",
-      changeFeedPath(schema, table), tracked, cfg, checkpoint,
+      changeFeedPath(schema, table), trackCols, cfg, checkpoint,
       maxFilesPerTrigger = maxFilesPerTrigger)
   }
 

@@ -248,12 +248,16 @@ object SegmentedIndex {
 
   /** Once-per-segment tombstone append: `rows` must carry
     * `below_seg = seg`; a retry that already wrote this segment's
-    * tombstones no-ops (the same crash-resume gate as the data append). */
+    * tombstones no-ops (the same crash-resume gate as the data append).
+    * The rows are O(changed ids), so they land as ONE file: written with
+    * their derivation's partitioning (a bucketed scan's dozens of tasks)
+    * every write would add that many files, and every probe reads them
+    * all. */
   def tombstoneSegment(spark: SparkSession, physTable: String,
                        rows: => DataFrame, seg: Long): Unit = {
     val tombT = tombstoneTable(physTable)
     if (spark.table(tombT).where(col("below_seg") === seg).limit(1).isEmpty)
-      rows.write.mode("append").format("parquet").saveAsTable(tombT)
+      rows.repartition(1).write.mode("append").format("parquet").saveAsTable(tombT)
   }
 
   /** (Re)create the EMPTY tombstone table of a fresh build/compaction

@@ -621,19 +621,20 @@ object Dedup {
     // ONE evaluation of the caller's change plan (§2.4): the sketch and
     // the tombstone ids would otherwise each re-run it.
     val ch = changes.localCheckpoint(true)
-    val sketch = minHashed(ch.where(col(opCol) =!= "D"), idCol, textCol,
-        shingleWords, k, bands)
-      .localCheckpoint(true)
-    // sorted bucketed append + the tiny unsorted tombstone append:
-    // disjoint tables, checkpointed inputs, both seg-gated on replay —
-    // the §2.6 one-heavy-plus-cheap overlap shape
-    graft.io.Overlap.awaitAll(Seq(
-      () => SI.appendSegment(spark, t, sketch, "band_key", buckets, seg),
-      () => SI.tombstoneSegment(spark, t,
-        ch.select(col(idCol)).distinct()
-          .select(col(idCol), lit(seg).as("below_seg")), seg)))
-    SI.appendLedger(spark, t, seg, batchId, sketch.count() / bands, 0L, idCol)
-    ch.unpersist(blocking = false): Unit
+    try {
+      val sketch = minHashed(ch.where(col(opCol) =!= "D"), idCol, textCol,
+          shingleWords, k, bands)
+        .localCheckpoint(true)
+      // sorted bucketed append + the tiny unsorted tombstone append:
+      // disjoint tables, checkpointed inputs, both seg-gated on replay —
+      // the §2.6 one-heavy-plus-cheap overlap shape
+      graft.io.Overlap.awaitAll(Seq(
+        () => SI.appendSegment(spark, t, sketch, "band_key", buckets, seg),
+        () => SI.tombstoneSegment(spark, t,
+          ch.select(col(idCol)).distinct()
+            .select(col(idCol), lit(seg).as("below_seg")), seg)))
+      SI.appendLedger(spark, t, seg, batchId, sketch.count() / bands, 0L, idCol)
+    } finally ch.unpersist(blocking = false): Unit
   }
 
   /** Fold accumulated segments and tombstones into a fresh segment-0 LSH

@@ -184,20 +184,21 @@ object Retrieval {
     // join/union tree, not a scan): rows and the tombstone ids would
     // otherwise each re-run it.
     val ch = changes.localCheckpoint(true)
-    val rows = bigramRows(ch.where(col(opCol) =!= "D"), idCol, textCol)
-      .localCheckpoint(true)
-    // sorted bucketed append + the tiny unsorted tombstone append:
-    // disjoint tables, checkpointed inputs, both seg-gated on replay —
-    // the §2.6 one-heavy-plus-cheap overlap shape (the KEPT pairing;
-    // two concurrent SORTED appends measured worse and stay sequential)
-    graft.io.Overlap.awaitAll(Seq(
-      () => SI.appendSegment(spark, t, rows, "bigram", buckets, seg),
-      () => SI.tombstoneSegment(spark, t,
-        ch.select(col(idCol)).distinct()
-          .select(col(idCol), lit(seg).as("below_seg")), seg)))
-    SI.appendLedger(spark, t, seg, batchId,
-      rows.select(col(idCol)).distinct().count(), 0L, idCol)
-    ch.unpersist(blocking = false): Unit
+    try {
+      val rows = bigramRows(ch.where(col(opCol) =!= "D"), idCol, textCol)
+        .localCheckpoint(true)
+      // sorted bucketed append + the tiny unsorted tombstone append:
+      // disjoint tables, checkpointed inputs, both seg-gated on replay —
+      // the §2.6 one-heavy-plus-cheap overlap shape (the KEPT pairing;
+      // two concurrent SORTED appends measured worse and stay sequential)
+      graft.io.Overlap.awaitAll(Seq(
+        () => SI.appendSegment(spark, t, rows, "bigram", buckets, seg),
+        () => SI.tombstoneSegment(spark, t,
+          ch.select(col(idCol)).distinct()
+            .select(col(idCol), lit(seg).as("below_seg")), seg)))
+      SI.appendLedger(spark, t, seg, batchId,
+        rows.select(col(idCol)).distinct().count(), 0L, idCol)
+    } finally ch.unpersist(blocking = false): Unit
   }
 
   /** Fold the phrase index's segments and tombstones into a fresh
@@ -353,16 +354,20 @@ object Retrieval {
     val docsT = t + "_docs"
     val tombT = SI.tombstoneTable(t)
     // ONE evaluation of the caller's change plan (§2.4): changedIds and
-    // the postings derivation would otherwise each re-run it.
+    // the postings derivation would otherwise each re-run it. Both are
+    // materialized from it, so it is released right after (or on their
+    // failure).
     val ch = changes.localCheckpoint(true)
-    val changedIds = ch.select(col(idCol)).distinct().localCheckpoint(true)
-    val upserts = ch.where(col(opCol) =!= "D")
-
-    // Fresh postings for the upserted documents, tagged with this segment.
-    val tf = upserts
-      .select(col(idCol), explode(tokens(col(textCol))).as("term"))
-      .groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    val (changedIds, tf) =
+      try {
+        val changedIds = ch.select(col(idCol)).distinct().localCheckpoint(true)
+        // Fresh postings for the upserted documents, tagged with this segment.
+        val tf = ch.where(col(opCol) =!= "D")
+          .select(col(idCol), explode(tokens(col(textCol))).as("term"))
+          .groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
+          .localCheckpoint(true)
+        (changedIds, tf)
+      } finally ch.unpersist(blocking = false): Unit
     val dl = tf.groupBy(idCol).agg(sum("tf").as("dl")).localCheckpoint(true)
     SI.appendSegment(spark, t, tf.join(dl, idCol), "term", buckets, seg)
     SI.appendSegment(spark, docsT, dl, idCol, buckets, seg)
@@ -389,7 +394,6 @@ object Retrieval {
 
     val s = dl.agg(count(lit(1)).as("nd"), coalesce(sum("dl"), lit(0L)).as("tt")).head()
     SI.appendLedger(spark, t, seg, batchId, s.getLong(0), s.getLong(1), idCol)
-    ch.unpersist(blocking = false): Unit
   }
 
   /** Fold accumulated segments and tombstones into a fresh segment-0

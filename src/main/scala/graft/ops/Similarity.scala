@@ -1517,99 +1517,100 @@ object Similarity {
     // deletedIds would otherwise re-run it once EACH — deletedIds twice
     // (repair-set derivation and the final tombstone write). §2.4.
     val ch = changes.localCheckpoint(true)
-    val changedIds = ch.select(col(idCol)).distinct().localCheckpoint(true)
-    val upserts = ch.where(col(opCol) =!= "D")
-      .select(col(idCol), col(vecCol), signBucket(col(vecCol), bits).as("__bkt"))
-      .localCheckpoint(true)
-    val upsertIds = upserts.select(col(idCol))
-    val deletedIds = ch.where(col(opCol) === "D").select(col(idCol))
+    try {
+      val changedIds = ch.select(col(idCol)).distinct().localCheckpoint(true)
+      val upserts = ch.where(col(opCol) =!= "D")
+        .select(col(idCol), col(vecCol), signBucket(col(vecCol), bits).as("__bkt"))
+        .localCheckpoint(true)
+      val upsertIds = upserts.select(col(idCol))
+      val deletedIds = ch.where(col(opCol) === "D").select(col(idCol))
 
-    // 1. Vector-store maintenance: retire every changed id's prior rows,
-    // land the upserted vectors at this segment. (Their own tombstone
-    // does not kill them: __seg is not below itself.) The two writes
-    // touch disjoint tables from checkpointed inputs and every state
-    // view below runs only after BOTH complete — overlapped (§2.6); a
-    // crash between them leaves the same retry-converging torn state in
-    // either order (both writes are seg-gated on replay).
-    graft.io.Overlap.awaitAll(Seq(
-      () => SI.tombstoneSegment(spark, vecsT,
-        changedIds.select(col(idCol), lit(seg).as("below_seg")), seg),
-      () => SI.appendSegment(spark, vecsT, upserts, "__bkt", buckets, seg)))
+      // 1. Vector-store maintenance: retire every changed id's prior rows,
+      // land the upserted vectors at this segment. (Their own tombstone
+      // does not kill them: __seg is not below itself.) The two writes
+      // touch disjoint tables from checkpointed inputs and every state
+      // view below runs only after BOTH complete — overlapped (§2.6); a
+      // crash between them leaves the same retry-converging torn state in
+      // either order (both writes are seg-gated on replay).
+      graft.io.Overlap.awaitAll(Seq(
+        () => SI.tombstoneSegment(spark, vecsT,
+          changedIds.select(col(idCol), lit(seg).as("below_seg")), seg),
+        () => SI.appendSegment(spark, vecsT, upserts, "__bkt", buckets, seg)))
 
-    // Replay-deterministic state views: vec tombstones THROUGH this
-    // segment (just written), edge tombstones strictly BEFORE it (this
-    // segment's edge tombstones may exist on a retry and must not hide
-    // the pre-update edges the computation reads).
-    val liveStore = SI.dropDead(spark.table(vecsT),
-      SI.tombstoneMax(spark, vecsT, idCol), idCol)
-    val priorEdgeTomb = broadcast(
-      SI.tombstones(spark, t).where(col("below_seg") < seg)
-        .groupBy("src").agg(max("below_seg").as("__below")))
-    val oldLive = SI.dropDead(spark.table(t).where(col(SI.SegCol) < seg),
-      priorEdgeTomb, "src")
-
-    // 2. Repair set: upserted nodes (their own neighborhood changed) +
-    // every node holding an edge to a changed id (hole / stale cosine).
-    val repairSrcs = upsertIds
-      .unionByName(oldLive
-        .join(broadcast(changedIds.select(col(idCol).as("dst"))), Seq("dst"), "left_semi")
-        .select(col("src").as(idCol)))
-      .join(broadcast(deletedIds), Seq(idCol), "left_anti")
-      .distinct().localCheckpoint(true)
-
-    // 3. Probe the live store from the repair nodes' (live) vectors —
-    // the delivery shape: identity + Hamming-1 keys, bucket cap at probe
-    // time, self-pairs excluded (a node is its own best match).
-    val probeVecs = liveStore
-      .join(broadcast(repairSrcs), Seq(idCol), "left_semi")
-      .select(col(idCol).as("__id_n"), col(vecCol).as("__vn"), col("__bkt"))
-    val probes = (0 until bits).map(j => col("__bkt").bitwiseXOR(1L << j))
-    val probeKeys = probeVecs
-      .select(col("__id_n"), col("__vn"),
-        explode(array(col("__bkt") +: probes: _*)).as("__bkt"))
-      .localCheckpoint(true)
-    val cand = SI.dropDead(
-        spark.table(vecsT)
-          .join(broadcast(probeKeys.select("__bkt").distinct()), Seq("__bkt"), "left_semi"),
+      // Replay-deterministic state views: vec tombstones THROUGH this
+      // segment (just written), edge tombstones strictly BEFORE it (this
+      // segment's edge tombstones may exist on a retry and must not hide
+      // the pre-update edges the computation reads).
+      val liveStore = SI.dropDead(spark.table(vecsT),
         SI.tombstoneMax(spark, vecsT, idCol), idCol)
-      .select(col("__bkt"), col(idCol).as("__id_c"), col(vecCol).as("__vc"))
-      .withColumn("__bn", count(lit(1)).over(Window.partitionBy("__bkt")))
-      .where(col("__bn") <= maxBucketSize)
-      .join(broadcast(probeKeys), Seq("__bkt"))
-      .where(col("__id_n") =!= col("__id_c"))
-      .select(col("__id_n"), col("__id_c"), cosine(col("__vn"), col("__vc")).as("cos"))
-      .localCheckpoint(true)
+      val priorEdgeTomb = broadcast(
+        SI.tombstones(spark, t).where(col("below_seg") < seg)
+          .groupBy("src").agg(max("below_seg").as("__below")))
+      val oldLive = SI.dropDead(spark.table(t).where(col(SI.SegCol) < seg),
+        priorEdgeTomb, "src")
 
-    // 4. New top-k: repair nodes rank their COMPLETE probed candidates;
-    // nodes that merely gained an upserted neighbor rank old ∪ new.
-    val repairEdges = cand
-      .select(col("__id_n").as("src"), col("__id_c").as("dst"), col("cos"))
-    val gainEdges = cand
-      .join(broadcast(upsertIds.select(col(idCol).as("__id_n"))), Seq("__id_n"), "left_semi")
-      .join(broadcast(repairSrcs.select(col(idCol).as("__id_c"))), Seq("__id_c"), "left_anti")
-      .select(col("__id_c").as("src"), col("__id_n").as("dst"), col("cos"))
-    val gainSrcs = gainEdges.select(col("src").as(idCol)).distinct().localCheckpoint(true)
-    val gainOld = oldLive
-      .join(broadcast(gainSrcs.select(col(idCol).as("src"))), Seq("src"), "left_semi")
-      .select(col("src"), col("dst"), col("cos"))
-    val w = Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))
-    val merged = repairEdges.unionByName(gainEdges).unionByName(gainOld)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .localCheckpoint(true)
-    // 5. New top-k append + tombstones of every rewritten/deleted node's
-    // prior versions: disjoint tables, checkpointed inputs, both
-    // seg-gated on replay — overlapped like the step-1 pair (§2.6). The
-    // ledger row still lands LAST (it is what publishes the batch).
-    graft.io.Overlap.awaitAll(Seq(
-      () => SI.appendSegment(spark, t, merged, "src", buckets, seg),
-      () => SI.tombstoneSegment(spark, t,
-        repairSrcs.unionByName(gainSrcs)
-          .unionByName(deletedIds).distinct()
-          .select(col(idCol).as("src"), lit(seg).as("below_seg")), seg)))
-    SI.appendLedger(spark, t, seg, batchId,
-      upserts.count(), merged.count(), "src")
-    ch.unpersist(blocking = false): Unit // deletedIds' last read was the tombstone write
+      // 2. Repair set: upserted nodes (their own neighborhood changed) +
+      // every node holding an edge to a changed id (hole / stale cosine).
+      val repairSrcs = upsertIds
+        .unionByName(oldLive
+          .join(broadcast(changedIds.select(col(idCol).as("dst"))), Seq("dst"), "left_semi")
+          .select(col("src").as(idCol)))
+        .join(broadcast(deletedIds), Seq(idCol), "left_anti")
+        .distinct().localCheckpoint(true)
+
+      // 3. Probe the live store from the repair nodes' (live) vectors —
+      // the delivery shape: identity + Hamming-1 keys, bucket cap at probe
+      // time, self-pairs excluded (a node is its own best match).
+      val probeVecs = liveStore
+        .join(broadcast(repairSrcs), Seq(idCol), "left_semi")
+        .select(col(idCol).as("__id_n"), col(vecCol).as("__vn"), col("__bkt"))
+      val probes = (0 until bits).map(j => col("__bkt").bitwiseXOR(1L << j))
+      val probeKeys = probeVecs
+        .select(col("__id_n"), col("__vn"),
+          explode(array(col("__bkt") +: probes: _*)).as("__bkt"))
+        .localCheckpoint(true)
+      val cand = SI.dropDead(
+          spark.table(vecsT)
+            .join(broadcast(probeKeys.select("__bkt").distinct()), Seq("__bkt"), "left_semi"),
+          SI.tombstoneMax(spark, vecsT, idCol), idCol)
+        .select(col("__bkt"), col(idCol).as("__id_c"), col(vecCol).as("__vc"))
+        .withColumn("__bn", count(lit(1)).over(Window.partitionBy("__bkt")))
+        .where(col("__bn") <= maxBucketSize)
+        .join(broadcast(probeKeys), Seq("__bkt"))
+        .where(col("__id_n") =!= col("__id_c"))
+        .select(col("__id_n"), col("__id_c"), cosine(col("__vn"), col("__vc")).as("cos"))
+        .localCheckpoint(true)
+
+      // 4. New top-k: repair nodes rank their COMPLETE probed candidates;
+      // nodes that merely gained an upserted neighbor rank old ∪ new.
+      val repairEdges = cand
+        .select(col("__id_n").as("src"), col("__id_c").as("dst"), col("cos"))
+      val gainEdges = cand
+        .join(broadcast(upsertIds.select(col(idCol).as("__id_n"))), Seq("__id_n"), "left_semi")
+        .join(broadcast(repairSrcs.select(col(idCol).as("__id_c"))), Seq("__id_c"), "left_anti")
+        .select(col("__id_c").as("src"), col("__id_n").as("dst"), col("cos"))
+      val gainSrcs = gainEdges.select(col("src").as(idCol)).distinct().localCheckpoint(true)
+      val gainOld = oldLive
+        .join(broadcast(gainSrcs.select(col(idCol).as("src"))), Seq("src"), "left_semi")
+        .select(col("src"), col("dst"), col("cos"))
+      val w = Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))
+      val merged = repairEdges.unionByName(gainEdges).unionByName(gainOld)
+        .withColumn("rank", row_number().over(w).cast("long"))
+        .where(col("rank") <= k)
+        .localCheckpoint(true)
+      // 5. New top-k append + tombstones of every rewritten/deleted node's
+      // prior versions: disjoint tables, checkpointed inputs, both
+      // seg-gated on replay — overlapped like the step-1 pair (§2.6). The
+      // ledger row still lands LAST (it is what publishes the batch).
+      graft.io.Overlap.awaitAll(Seq(
+        () => SI.appendSegment(spark, t, merged, "src", buckets, seg),
+        () => SI.tombstoneSegment(spark, t,
+          repairSrcs.unionByName(gainSrcs)
+            .unionByName(deletedIds).distinct()
+            .select(col(idCol).as("src"), lit(seg).as("below_seg")), seg)))
+      SI.appendLedger(spark, t, seg, batchId,
+        upserts.count(), merged.count(), "src")
+    } finally ch.unpersist(blocking = false): Unit // deletedIds' last read was the tombstone write
   }
 
   /** The live maintained graph — [[knnGraph]]-shaped (src, dst, cos,
@@ -3033,13 +3034,15 @@ object Similarity {
     // re-run it (§2.4 — the retained-output shape applied to the change
     // batch itself).
     val ch = changes.localCheckpoint(true)
-    val changedIds = ch.select(col(idCol)).distinct().localCheckpoint(true)
-    val assignedNew = payload(
-        ivfAssign(ch.where(col(opCol) =!= "D"),
-          centroids, idCol, vecCol, cidCol)
-        .select(col(idCol), col(vecCol), col("cluster")))
-      .withColumn(SI.SegCol, lit(seg)).localCheckpoint(true)
-    ch.unpersist(blocking = false): Unit // both derivations are materialized
+    val (changedIds, assignedNew) =
+      try {
+        (ch.select(col(idCol)).distinct().localCheckpoint(true),
+          payload(
+            ivfAssign(ch.where(col(opCol) =!= "D"),
+              centroids, idCol, vecCol, cidCol)
+            .select(col(idCol), col(vecCol), col("cluster")))
+          .withColumn(SI.SegCol, lit(seg)).localCheckpoint(true))
+      } finally ch.unpersist(blocking = false): Unit // both derivations are materialized
     // Impacted partitions: where changed ids live now, plus where
     // upserts land. The "live now" lookup goes through the id->cluster
     // map sidecar when present — its read is PRUNED to the changed ids'

@@ -1,5 +1,7 @@
 package graft.queries
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -59,10 +61,12 @@ object Tables {
   // LogicalRelation + FileIndex over the immutable input file): every
   // action over it still scans the parquet input in full — no result or
   // data caching is involved, exactly as if the caller had kept the
-  // DataFrame reference itself. Keyed weakly per session so stopped test
-  // sessions can be collected.
+  // DataFrame reference itself. Entries live until their session's
+  // application ends: the cached frames reference their session, so a
+  // weakly keyed map could never drop one; instead a listener on each
+  // SparkContext drops that context's sessions when it stops.
   private val readCache =
-    new java.util.WeakHashMap[SparkSession,
+    new java.util.HashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
 
   private def perSession(spark: SparkSession)
@@ -70,11 +74,25 @@ object Tables {
     readCache.synchronized {
       var m = readCache.get(spark)
       if (m == null) {
+        val sc = spark.sparkContext
+        if (!readCache.keySet.stream.anyMatch(_.sparkContext eq sc))
+          sc.addSparkListener(new ReleaseOnStop(sc))
         m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
         readCache.put(spark, m)
       }
       m
     }
+
+  /** Drops the cached reads of every session of `sc` when it stops. */
+  private final class ReleaseOnStop(sc: SparkContext) extends SparkListener {
+    override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+      readCache.synchronized {
+        readCache.keySet.removeIf(_.sparkContext eq sc): Unit
+      }
+  }
+
+  /** Sessions holding cached reads (for specs). */
+  private[queries] def cachedSessions: Int = readCache.synchronized(readCache.size)
 
   private def cachedRead(spark: SparkSession, path: String): DataFrame =
     perSession(spark).computeIfAbsent(path, p => spark.read.parquet(p))

@@ -92,13 +92,20 @@ object CdcStream {
     * write and checkpoint commit) skips a completed partition — so the
     * log keeps the ORIGINAL pre-images, which a post-merge recompute
     * could not reproduce — and rewrites a partial one whole. Rows within
-    * a batch are keyed (pks, change_seq, batch_id). */
+    * a batch are keyed (pks, change_seq, batch_id).
+    *
+    * An empty `trackCols` tracks every non-PK data column of the source
+    * schema (taken from the same inference the stream needs anyway). */
   def startWithChangeFeed(spark: SparkSession, tableDir: String, outPath: String,
                           cdfPath: String, trackCols: Seq[String], cfg: TableConfig,
                           checkpoint: String, trigger: Trigger = Trigger.AvailableNow(),
                           maxFilesPerTrigger: Int = 100): StreamingQuery = {
     require(cfg.hasPrimaryKey, "change feed requires primary keys")
     val schema = sourceSchema(spark, tableDir)
+    val tracked =
+      if (trackCols.nonEmpty) trackCols
+      else schema.fieldNames.toSeq
+        .filterNot(c => cfg.primaryKeys.contains(c) || c == graft.cdc.Op.column)
     val stream = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -114,7 +121,7 @@ object CdcStream {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          val sink = CdcPipeline.ChangeFeedSink(cdfPath, trackCols, Some(batchId))
+          val sink = CdcPipeline.ChangeFeedSink(cdfPath, tracked, Some(batchId))
           CdcPipeline.mergeTagged(batch.sparkSession, batch, outPath, cfg,
             changeFeed = Some(sink)): Unit
         }

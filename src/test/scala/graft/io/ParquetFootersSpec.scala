@@ -121,4 +121,25 @@ class ParquetFootersSpec extends SparkSpec {
     assert(s2.rowsWritten == 0L)
     assert(MorTable.read(spark, out).count() == 20L + 2L - 3L)
   }
+
+  test("mergedSchema ≡ mergeSchema inference over the same dirs; partless and missing dirs are left out") {
+    val root = Files.createTempDirectory("footers_schema").toString
+    // the second dir reorders the first's columns and adds two, one nested
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$root/d0")
+    Seq(("b", 2L, 2.5)).toDF("v", "k", "x")
+      .withColumn("s", struct($"x".as("y"), lit("z").as("z"))).repartition(3)
+      .write.parquet(s"$root/d1")
+    val partless = s"$root/d2"
+    Seq.empty[(Long, String)].toDF("k", "v").write.parquet(partless)
+    val fs = new Path(partless).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(new Path(partless)).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).foreach(fs.delete(_, false))
+    val dirs = Seq(s"$root/d0", s"$root/d1", partless, s"$root/missing")
+    val ((schema, held), jobs) = JobCounter(spark)(ParquetFooters.mergedSchema(spark, dirs))
+    assert(jobs == 0L)
+    assert(held == dirs.take(2))
+    // reads make every field nullable, so compare the schemas they read with
+    assert(spark.read.schema(schema).parquet(held: _*).schema ==
+      spark.read.option("mergeSchema", "true").parquet(held: _*).schema)
+  }
 }

@@ -2,7 +2,10 @@ package graft.queries
 
 import graft.SparkSpec
 
+import java.lang.management.ManagementFactory
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import scala.sys.process.{Process, ProcessLogger}
 
 class TablesSpec extends SparkSpec {
   import spark.implicits._
@@ -21,5 +24,20 @@ class TablesSpec extends SparkSpec {
     val events = Tables.events(session, sfDir)
     assert(events.as[(Long, Long)].collect().toSet == Set((1L, 1000L), (2L, 2000L)))
     assert(Tables.events(session, sfDir) eq events, "the normalized read is cached")
+  }
+
+  test("a stopped session's cached reads are released") {
+    // stopping a session stops its SparkContext, so the check runs in a
+    // child JVM with its own, under this JVM's flags and classpath
+    val root = Files.createTempDirectory("tables_stop").toString
+    val flags = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
+      .filterNot(_.startsWith("-Xmx"))
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++ flags ++
+      Seq("-Xmx1g", "-cp", sys.props("java.class.path"),
+        TablesStopCheck.getClass.getName.stripSuffix("$"), root)
+    val out = new StringBuilder
+    val code = Process(cmd).!(ProcessLogger(l => out.append(l).append('\n'), _ => ()))
+    assert(code == 0, out.toString)
+    assert(out.toString.contains("cached before stop: 1, after stop: 0"))
   }
 }
